@@ -304,6 +304,7 @@ def test_q61_releases_everything_when_a_leg_fails(spark, monkeypatch):
     from unimib_simpss_spark.plans import llm_dedup
 
     before = persistent_rdd_ids(spark)
+    threads_before = set(threading.enumerate())
 
     def boom(*a, **kw):
         raise RuntimeError("planted leg failure")
@@ -313,9 +314,10 @@ def test_q61_releases_everything_when_a_leg_fails(spark, monkeypatch):
         llm_dedup.q61_incremental_dedup(spark, SF_SMALL)
     leaked = persistent_rdd_ids(spark) - before
     assert leaked == set(), f"q61 leaked persistent RDDs: {sorted(leaked)}"
-    # the pool was shut down: no worker thread survives the host
+    # the pool was shut down: no worker thread it started survives the
+    # host (pools that were alive before the call are not q61's)
     assert not [
         t
-        for t in threading.enumerate()
+        for t in set(threading.enumerate()) - threads_before
         if t.name.startswith("ThreadPoolExecutor") and t.is_alive()
     ]

@@ -777,3 +777,29 @@ def test_replicate_copies_sql_matches_python_reference(keys, w, dw):
         want = kk + (1 if h < thr else 0)
         assert got[i] == want, (i, s, got[i], want)
         assert math.floor(w_eff) <= got[i] <= math.ceil(w_eff), (i, w_eff)
+
+
+@SETTINGS
+@given(
+    extra=st.lists(st.integers(-300, 600), max_size=12),
+    m=st.sampled_from([64, 100, 256]),
+)
+def test_bloom_probe_rejects_positions_outside_m(spark, extra, m):
+    """Property: a bit relation whose positions all lie in [0, m)
+    probes with no false negative; one position outside it (a relation
+    built with a different m) raises a clear m-mismatch error instead
+    of aliasing into the packed words."""
+    from unimib_simpss_spark.functions.sketches import bloom_bits, bloom_probe
+
+    member = spark.createDataFrame([("x",)], "v string")
+    bits = bloom_bits(member, "v", m=m).select(
+        F.col("pos").cast("long").alias("pos")
+    )
+    bits = bits.unionByName(
+        spark.createDataFrame([(p,) for p in extra], "pos long")
+    )
+    if all(0 <= p < m for p in extra):
+        assert bloom_probe(bits, member, "v", m=m).first().bloom_hit == 1
+    else:
+        with pytest.raises(ValueError, match=f"different m than this probe's m={m}"):
+            bloom_probe(bits, member, "v", m=m)

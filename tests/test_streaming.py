@@ -3174,3 +3174,170 @@ def test_streaming_drift_suite_matches_batch_prefix(spark, tmp_path):
             dict(pin, groups={1: (0.0, 1.0, [0.2, 0.5, 0.8])}),
             bins=5, q=4,
         )
+
+
+# ------------------------------- recorded generation schema, pinned reads
+_SWAP_SINKS = ("upsert", "additive", "register", "scd2", "manifest")
+
+
+def _swap_sink_fold(spark, name, table, i):
+    """Fold batch ``i`` into ``table`` through one of the five sinks
+    that commit by generation swap."""
+    from unimib_simpss_spark.streaming import sinks as S
+
+    kv = spark.createDataFrame(
+        [(f"k{i}", float(i), f"g{i % 2}"), ("kz", 0.5 + i, "g0")],
+        "k string, v double, grp string",
+    )
+    if name == "upsert":
+        S.upsert_keyed_parquet(kv, table, ("k",), partition_col="grp")
+    elif name == "additive":
+        S.additive_merge_parquet(kv, table, ("k",), {"sum_v": "v"}, i)
+    elif name == "register":
+        S.register_merge_parquet(kv, table, ("grp",), "k", batch_id=i)
+    elif name == "scd2":
+        upd = kv.select(
+            "k",
+            F.lit(i).cast("long").alias("event_id"),
+            F.col("v").alias("value"),
+            F.timestamp_seconds(F.lit(i)).alias("ts"),
+        )
+        S.scd2_merge_parquet(upd, table, ("k",), "ts", "event_id", "value", i)
+    else:
+        S.foreach_batch_release_manifest(table, "k", 4)(kv, i)
+
+
+@pytest.mark.parametrize("name", _SWAP_SINKS)
+def test_recorded_schema_read_equals_inferred_read(spark, tmp_path, name):
+    """Every swapping sink records its generation's schema; the
+    recorded read has the same schema and rows as Spark's inference
+    over the same directory, and it launches no inference job."""
+    import os
+
+    from unimib_simpss_spark.streaming.sinks import (
+        _SCHEMA_FILE,
+        _current_generation,
+        _read_generation,
+    )
+
+    table = str(tmp_path / name)
+    for i in range(2):  # the second fold merges through a recorded read
+        _swap_sink_fold(spark, name, table, i)
+    gen, _ = _current_generation(table)
+    assert os.path.exists(os.path.join(gen, _SCHEMA_FILE))
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description")
+    saved = {k: sc.getLocalProperty(k) for k in props}
+    sc.setJobGroup("recorded-read", "recorded-read")
+    try:
+        got = _read_generation(spark, table)
+        jobs = sc.statusTracker().getJobIdsForGroup("recorded-read")
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    assert jobs == []
+    want = spark.read.parquet(gen)
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.collect())
+    )
+
+
+def test_keyed_read_returns_pre_swap_rows_after_a_swap(spark, tmp_path):
+    """A planned keyed read is pinned to the generation it resolved: an
+    upsert that swaps the table before ``collect()`` must neither make
+    the read fail nor change its rows."""
+    from unimib_simpss_spark.streaming.sinks import (
+        read_keyed_parquet,
+        upsert_keyed_parquet,
+    )
+
+    table = str(tmp_path / "keyed")
+    mk = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "k string, v double, grp string"
+    )
+    keys = ("grp", "k")
+    upsert_keyed_parquet(
+        mk([("a", 1.0, "g1"), ("b", 2.0, "g2")]), table, keys, "grp"
+    )
+    pinned = read_keyed_parquet(spark, table).where(F.col("v") > 0)
+    upsert_keyed_parquet(
+        mk([("a", 5.0, "g1"), ("c", 3.0, "g1")]), table, keys, "grp"
+    )
+    assert sorted(map(tuple, pinned.collect())) == [
+        ("a", 1.0, "g1"),
+        ("b", 2.0, "g2"),
+    ]
+    assert sorted(map(tuple, read_keyed_parquet(spark, table).collect())) == [
+        ("a", 5.0, "g1"),
+        ("b", 2.0, "g2"),
+        ("c", 3.0, "g1"),
+    ]
+    with pytest.raises(ValueError, match="no keyed table"):
+        read_keyed_parquet(spark, str(tmp_path / "nope"))
+
+
+def test_numeric_looking_string_partition_reads_back_as_string(spark, tmp_path):
+    """The recorded schema keeps the written type of a partition
+    column: string values that look numeric stay strings (Spark's
+    inference would read them as int)."""
+    from unimib_simpss_spark.streaming.sinks import (
+        read_keyed_parquet,
+        upsert_keyed_parquet,
+    )
+
+    table = str(tmp_path / "keyed")
+    batch = spark.createDataFrame(
+        [("a", 1.0, "07"), ("b", 2.0, "10")], "k string, v double, grp string"
+    )
+    upsert_keyed_parquet(batch, table, ("grp", "k"), partition_col="grp")
+    upsert_keyed_parquet(batch, table, ("grp", "k"), partition_col="grp")
+    df = read_keyed_parquet(spark, table)
+    assert df.schema["grp"].dataType.simpleString() == "string"
+    assert sorted(map(tuple, df.collect())) == [
+        ("a", 1.0, "07"),
+        ("b", 2.0, "10"),
+    ]
+
+
+def test_reads_without_a_schema_record_fall_back_to_inference(spark, tmp_path):
+    """A legacy plain-directory table and a generation with no schema
+    record (written before records existed) both still read, and the
+    next upsert folds them and records its own generation."""
+    import os
+
+    from unimib_simpss_spark.streaming.sinks import (
+        _SCHEMA_FILE,
+        _current_generation,
+        read_keyed_parquet,
+        upsert_keyed_parquet,
+    )
+
+    mk = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "k string, v double"
+    )
+    legacy = str(tmp_path / "legacy")
+    mk([("a", 1.0)]).write.parquet(legacy)
+    assert [tuple(r) for r in read_keyed_parquet(spark, legacy).collect()] == [
+        ("a", 1.0)
+    ]
+    upsert_keyed_parquet(mk([("b", 2.0)]), legacy, ("k",))
+    assert os.path.islink(legacy)
+    assert sorted(map(tuple, read_keyed_parquet(spark, legacy).collect())) == [
+        ("a", 1.0),
+        ("b", 2.0),
+    ]
+
+    table = str(tmp_path / "unrecorded")
+    upsert_keyed_parquet(mk([("a", 1.0)]), table, ("k",))
+    gen, _ = _current_generation(table)
+    os.remove(os.path.join(gen, _SCHEMA_FILE))
+    assert [tuple(r) for r in read_keyed_parquet(spark, table).collect()] == [
+        ("a", 1.0)
+    ]
+    upsert_keyed_parquet(mk([("a", 3.0)]), table, ("k",))
+    gen, _ = _current_generation(table)
+    assert os.path.exists(os.path.join(gen, _SCHEMA_FILE))
+    assert [tuple(r) for r in read_keyed_parquet(spark, table).collect()] == [
+        ("a", 3.0)
+    ]

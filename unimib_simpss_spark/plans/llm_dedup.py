@@ -1630,8 +1630,10 @@ def q62_corpus_pipeline(
                 # (profiled: the fill stage otherwise launches ~5 s in),
                 # and unlike q02 no consumer needs the finalized
                 # partitioning at plan time — so the 32-way tokenize
-                # overlaps the planning instead of waiting behind it
-                pool.submit(lambda: pre.count())
+                # overlaps the planning instead of waiting behind it;
+                # its result is checked after the chains', so a failure
+                # in the fill alone still raises
+                f_fill = pool.submit(lambda: pre.count())
                 f_lm = pool.submit(
                     _tracked, _lm_chain,
                     pre.select("doc_id", "source", "toks"), False,
@@ -1641,6 +1643,7 @@ def q62_corpus_pipeline(
                 scored = f_lm.result()
                 docs_q, clusters = f_dd.result()
                 hits = f_dc.result()
+                f_fill.result()
     else:
         # single-section ('ppl') run: the chain owns a narrow
         # (doc_id, source, toks) cache and frees it as soon as the

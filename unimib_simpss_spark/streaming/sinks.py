@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import glob
 import hashlib
+import json
 import os
 import re
 import shutil
@@ -33,6 +34,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 # ------------------------------------------------ generation-swap layout
 # Read-merge-write sinks on plain parquet cannot rewrite a table in
@@ -40,14 +42,20 @@ from pyspark.sql import functions as F
 # formats solve with metadata swaps; see compact_to's directory-swap
 # note in sources/lakehouse.py). The portable discipline here: each
 # merge writes a FRESH generation directory under
-# ``<path>.__generations__/gen-<batch_id>-<nonce>`` and ``<path>``
+# ``<path>.__generations__/gen.<batch_id>.<nonce>`` and ``<path>``
 # itself is a SYMLINK swapped to the new generation with one atomic
-# ``os.replace`` — readers (``spark.read.parquet(path)``) always see a
-# complete table, and because the applied batch id is part of the
+# ``os.replace``; because the applied batch id is part of the
 # generation NAME, table state and replay cursor advance in the same
 # atomic rename (no window where one moved and the other didn't).
+# Each generation also records the schema it was written with in
+# ``<gen>/_schema.json`` (Spark's file listing skips ``_`` names).
+# Every reader goes through :func:`_read_generation`, which resolves
+# the symlink ONCE and scans that generation directory under its
+# recorded schema: no read pays Spark's footer-inference job, and a
+# later swap cannot move the files out from under a planned read.
 
 _GEN_RE = re.compile(r"^gen\.(-?\d+)\.")
+_SCHEMA_FILE = "_schema.json"
 
 
 def _generations_root(path: str) -> str:
@@ -117,13 +125,16 @@ def _current_generation(path: str) -> tuple[str | None, int]:
     return None, -1
 
 
-def _swap_in_generation(path: str, write_fn, batch_id: int) -> None:
-    """Run ``write_fn(generation_dir)`` to produce a new generation,
-    then atomically point ``path`` at it. A crash before the
-    ``os.replace`` leaves the old state live and the old batch id
-    applied (the batch replays cleanly; the one legacy-migration rename
-    window self-heals in :func:`_current_generation`); a crash after it
-    leaves at worst stale directories, cleaned on the next call.
+def _swap_in_generation(
+    path: str, df: DataFrame, batch_id: int, partition_col: str | None = None
+) -> None:
+    """Write ``df`` (partitioned by ``partition_col`` when given) as a
+    new generation with its schema record, then atomically point
+    ``path`` at it. A crash before the ``os.replace`` leaves the old
+    state live and the old batch id applied (the batch replays
+    cleanly; the one legacy-migration rename window self-heals in
+    :func:`_current_generation`); a crash after it leaves at worst
+    stale directories, cleaned on the next call.
 
     Retirement is DEFERRED BY ONE GENERATION: the generation the
     symlink pointed at before this swap survives until the NEXT swap,
@@ -142,12 +153,24 @@ def _swap_in_generation(path: str, write_fn, batch_id: int) -> None:
     gen = os.path.join(
         os.path.realpath(root), f"gen.{batch_id}.{uuid.uuid4().hex[:8]}"
     )
-    write_fn(gen)
+    writer = df.write.mode("overwrite")
+    if partition_col:
+        writer = writer.partitionBy(partition_col)
+    writer.parquet(gen)
+    # data columns, then the partition column, all nullable: the schema
+    # Spark's inference reports for the directory, with the written
+    # types (a string partition whose values look numeric stays string)
+    fields = sorted(df.schema.fields, key=lambda f: f.name == partition_col)
+    recorded = StructType(
+        [StructField(f.name, f.dataType, True, f.metadata) for f in fields]
+    )
+    with open(os.path.join(gen, _SCHEMA_FILE), "w") as fh:
+        fh.write(recorded.json())
     prev_target = os.path.realpath(p) if os.path.islink(p) else None
     legacy = None
     if os.path.exists(p) and not os.path.islink(p):
         # migrate a pre-swap plain directory out of the way; its bytes
-        # were already folded into `merged` via the read above, and a
+        # were already folded into `df` via the caller's read, and a
         # crash between this rename and the replace below is recovered
         # by _current_generation's legacy-restore path
         legacy = p + f".__legacy__{uuid.uuid4().hex[:8]}"
@@ -179,6 +202,26 @@ def _swap_in_generation(path: str, write_fn, batch_id: int) -> None:
             pass
 
 
+def _read_generation(spark: SparkSession, path: str) -> DataFrame | None:
+    """The table's current generation, or ``None`` when there is no
+    table. The symlink is resolved once and the scan opens that
+    generation directory, so a swap after this call cannot take the
+    files away (the previous generation survives one more swap, see
+    :func:`_swap_in_generation`). The schema comes from the
+    generation's record; a directory without one (a legacy plain
+    table, or a generation written before records existed) falls back
+    to Spark's inference."""
+    gen, _ = _current_generation(path)
+    if gen is None:
+        return None
+    try:
+        with open(os.path.join(gen, _SCHEMA_FILE)) as fh:
+            recorded = StructType.fromJson(json.load(fh))
+    except FileNotFoundError:
+        return spark.read.parquet(gen)
+    return spark.read.schema(recorded).parquet(gen)
+
+
 def upsert_keyed_parquet(
     batch: DataFrame,
     path: str,
@@ -191,15 +234,13 @@ def upsert_keyed_parquet(
     semantics); within the batch, later rows win (the reference applies
     messages in consumption order, consumer.py:74-75).
     """
-    spark = batch.sparkSession
     new = batch.withColumn("_src", F.lit(1)).withColumn(
         "_seq", F.monotonically_increasing_id()
     )
-    cur, _ = _current_generation(path)
-    if cur is not None:
+    old = _read_generation(batch.sparkSession, path)
+    if old is not None:
         old = (
-            spark.read.parquet(cur)
-            .select(*batch.columns)
+            old.select(*batch.columns)
             .withColumn("_src", F.lit(0))
             .withColumn("_seq", F.lit(0).cast("long"))
         )
@@ -214,19 +255,12 @@ def upsert_keyed_parquet(
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_src", "_seq")
     )
-
-    def _write(target: str) -> None:
-        writer = result.write.mode("overwrite")
-        if partition_col:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(target)
-
     # Generation swap (module docstring above): `result` reads from the
     # live generation, the write lands in a NEW one, and the symlink
     # flip is the atomic commit — no torn-table window, no staging
     # double-write. Upserts are idempotent by PK so the batch id is
     # advisory here (replays are absorbed either way).
-    _swap_in_generation(path, _write, batch_id=-1)
+    _swap_in_generation(path, result, batch_id=-1, partition_col=partition_col)
 
 
 def foreach_batch_upsert(
@@ -245,7 +279,11 @@ def foreach_batch_upsert(
 
 
 def read_keyed_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The keyed table as one pinned generation (:func:`_read_generation`)."""
+    df = _read_generation(spark, path)
+    if df is None:
+        raise ValueError(f"no keyed table at {path} yet")
+    return df
 
 
 # ------------------------------------------------- additive agg sink
@@ -272,16 +310,16 @@ def additive_merge_parquet(
     as the upsert sink — the write is crash-atomic and carries the
     applied ``batch_id`` in the committed generation's name).
     """
-    spark = batch.sparkSession
     partial = batch.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n_rows"),
         *[F.sum(src).alias(out) for out, src in sums.items()],
     )
-    cur, last = _current_generation(path)
-    if cur is not None:
-        old = spark.read.parquet(cur).select(*partial.columns)
+    _, last = _current_generation(path)
+    old = _read_generation(batch.sparkSession, path)
+    if old is not None:
         merged = (
-            old.unionByName(partial)
+            old.select(*partial.columns)
+            .unionByName(partial)
             .groupBy(*keys)
             .agg(
                 F.sum("n_rows").alias("n_rows"),
@@ -295,11 +333,7 @@ def additive_merge_parquet(
     # foreach_batch_additive maintains must carry the current applied id
     # forward, or checkpoint-replayed batches double-count after the
     # manual merge (ADVICE r11).
-    _swap_in_generation(
-        path,
-        lambda gen: merged.write.mode("overwrite").parquet(gen),
-        max(last, batch_id),
-    )
+    _swap_in_generation(path, merged, max(last, batch_id))
 
 
 def foreach_batch_additive(path: str, keys: tuple[str, ...], sums: dict):
@@ -349,7 +383,6 @@ def register_merge_parquet(
     from unimib_simpss_spark.functions.sketches import HLL_P, hll_registers
 
     p = HLL_P if p is None else p
-    spark = batch.sparkSession
     gcols = list(group_cols)
     # precision is STORED IN THE TABLE (a constant column): registers
     # built at different p have incompatible bucket ids and rank
@@ -357,9 +390,9 @@ def register_merge_parquet(
     # and a mismatched read would inflate the linear-counting zeros
     # term — both must be loud (review r11 pass 3)
     regs = hll_registers(batch, gcols, col, p).withColumn("p", F.lit(p))
-    cur, last = _current_generation(path)
-    if cur is not None:
-        old = spark.read.parquet(cur)
+    _, last = _current_generation(path)
+    old = _read_generation(batch.sparkSession, path)
+    if old is not None:
         stored_p = old.select("p").first()
         if stored_p is not None and stored_p.p != p:
             raise ValueError(
@@ -374,14 +407,10 @@ def register_merge_parquet(
         )
     else:
         merged = regs
-
-    def _write(target: str) -> None:
-        merged.write.mode("overwrite").parquet(target)
-
     # max(): same cursor carry-forward as additive_merge_parquet — here
     # max-merge is idempotent so a regressed cursor only re-pays merges,
     # but the generation name should still never move backwards.
-    _swap_in_generation(path, _write, batch_id=max(last, batch_id))
+    _swap_in_generation(path, merged, batch_id=max(last, batch_id))
 
 
 def foreach_batch_hll(
@@ -417,10 +446,10 @@ def read_hll_estimates(
         hll_distinct_from_registers,
     )
 
-    regs = spark.read.parquet(path)
-    stored = regs.select("p").first()
+    regs = _read_generation(spark, path)
+    stored = regs.select("p").first() if regs is not None else None
     if stored is None:
-        raise ValueError(f"register table at {path} is empty")
+        raise ValueError(f"register table at {path} is missing or empty")
     if p is not None and p != stored.p:
         raise ValueError(
             f"register table at {path} was built with p={stored.p}, "
@@ -484,7 +513,6 @@ def scd2_merge_parquet(
     only matched files."""
     from unimib_simpss_spark.sources.lakehouse import scd2_history
 
-    spark = batch.sparkSession
     kl = list(keys)
     # seed-priority tiebreak column (0 = replayed open version, 1 =
     # new update): uniquified against the caller's column names
@@ -494,10 +522,9 @@ def scd2_merge_parquet(
     upd = batch.where(F.col(ts_col).isNotNull()).select(
         *kl, id_col, value_col, ts_col, F.lit(1).alias(c_seed)
     )
-    cur, _ = _current_generation(path)
+    hist = _read_generation(batch.sparkSession, path)
     closed = None
-    if cur is not None:
-        hist = spark.read.parquet(cur)
+    if hist is not None:
         closed = hist.where(F.col("valid_to").isNotNull())
         open_ = hist.where(F.col("valid_to").isNull())
         # late guard: a batch row older than the key's open version
@@ -524,11 +551,7 @@ def scd2_merge_parquet(
     )
     if closed is not None:
         merged = closed.select(*merged.columns).unionByName(merged)
-
-    def _write(target: str) -> None:
-        merged.write.mode("overwrite").parquet(target)
-
-    _swap_in_generation(path, _write, batch_id=batch_id)
+    _swap_in_generation(path, merged, batch_id=batch_id)
 
 
 def foreach_batch_scd2(
@@ -710,12 +733,9 @@ def read_drift_cat_metrics(
 
     top_vals = top_categories(ref, col, top_k)
     sig = hashlib.md5("\x1f".join(sorted(top_vals)).encode()).hexdigest()
-    cur, _ = _current_generation(path)
-    stored = (
-        spark.read.parquet(cur)
-        if cur is not None
-        else spark.createDataFrame([], "pin string, bucket string, n_rows long")
-    )
+    stored = _read_generation(spark, path)
+    if stored is None:
+        stored = spark.createDataFrame([], "pin string, bucket string, n_rows long")
     pins = [r["pin"] for r in stored.select("pin").distinct().collect()]
     if len(pins) > 1:
         raise ValueError(
@@ -776,16 +796,13 @@ def read_drift_metrics_by(
     st = refd.groupBy("_g").agg(
         F.min("_v").alias("_lo"), F.max("_v").alias("_hi")
     )
-    cur, _ = _current_generation(path)
-    stored = (
-        spark.read.parquet(cur)
-        if cur is not None
-        else spark.createDataFrame(
+    stored = _read_generation(spark, path)
+    if stored is None:
+        stored = spark.createDataFrame(
             [],
             "bins int, grp string, lo double, hi double, "
             "bin long, n_rows long",
         )
-    )
     cfg = stored.select("bins").distinct().collect()
     if len(cfg) > 1:
         raise ValueError(
@@ -881,14 +898,11 @@ def read_drift_metrics(
     # with an opaque path-not-found — the documented contract for "no
     # data yet" is the same as an empty committed table: zero current
     # counts (there is no stored pin to check either way)
-    cur, _ = _current_generation(path)
-    stored = (
-        spark.read.parquet(cur)
-        if cur is not None
-        else spark.createDataFrame(
+    stored = _read_generation(spark, path)
+    if stored is None:
+        stored = spark.createDataFrame(
             [], "bins int, lo double, hi double, bin long, n_rows long"
         )
-    )
     cfg = stored.select("bins", "lo", "hi").distinct().collect()
     if len(cfg) > 1:
         raise ValueError(
@@ -1003,14 +1017,11 @@ def read_drift_q_metrics(
         quantile_edges,
     )
 
-    cur, _ = _current_generation(path)
-    stored = (
-        spark.read.parquet(cur)
-        if cur is not None
-        else spark.createDataFrame(
+    stored = _read_generation(spark, path)
+    if stored is None:
+        stored = spark.createDataFrame(
             [], "q int, pin string, bin long, n_rows long"
         )
-    )
     cfg = stored.select("q", "pin").distinct().collect()
     if len(cfg) > 1:
         raise ValueError(
@@ -1090,13 +1101,12 @@ def read_ldiv_metrics(
     derivable from thin air)."""
     from unimib_simpss_spark.functions.privacy import ldiversity_from_cell
 
-    cur, _ = _current_generation(path)
-    if cur is None:
+    stored = _read_generation(spark, path)
+    if stored is None:
         raise ValueError(
             f"no privacy-audit generation at {path} yet — the "
             "foreach_batch_ldiv sink has not committed a batch"
         )
-    stored = spark.read.parquet(cur)
     cell = stored.select(
         *quasi_cols, sensitive_col, F.col("n_rows").alias("_c")
     )
@@ -1135,8 +1145,7 @@ def foreach_batch_release_manifest(
     )
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        cur, last = _current_generation(path)
+        _, last = _current_generation(path)
         if batch_id <= last:
             return  # replayed batch: already folded
         tagged = batch.withColumn("shard", shard_col(key, n_shards))
@@ -1145,8 +1154,8 @@ def foreach_batch_release_manifest(
             .withColumn("n_shards", F.lit(n_shards))
             .withColumn("token_col", F.lit(token_col).cast("string"))
         )
-        if cur is not None:
-            old = spark.read.parquet(cur)
+        old = _read_generation(batch.sparkSession, path)
+        if old is not None:
             stored_n = old.select("n_shards", "token_col").first()
             if stored_n is not None and stored_n.n_shards != n_shards:
                 raise ValueError(
@@ -1184,11 +1193,7 @@ def foreach_batch_release_manifest(
             )
         else:
             merged = fresh
-
-        def _write(target: str) -> None:
-            merged.write.mode("overwrite").parquet(target)
-
-        _swap_in_generation(path, _write, batch_id=max(last, batch_id))
+        _swap_in_generation(path, merged, batch_id=max(last, batch_id))
 
     return _apply
 
@@ -1198,14 +1203,14 @@ def read_release_manifest(spark: SparkSession, path: str) -> DataFrame:
     digest)``, the exact rows ``write_corpus_release`` would publish
     for the same corpus (the ``n_shards`` guard column is stripped).
     Raises before the sink's first generation."""
-    cur, _ = _current_generation(path)
-    if cur is None:
+    stored = _read_generation(spark, path)
+    if stored is None:
         raise ValueError(
             f"no release-manifest generation at {path} yet — the "
             "foreach_batch_release_manifest sink has not committed a "
             "batch"
         )
-    return spark.read.parquet(cur).drop("n_shards", "token_col")
+    return stored.drop("n_shards", "token_col")
 
 
 # ------------------------------------------- streaming n-gram LM sink
@@ -1259,8 +1264,8 @@ def read_lm_scores(
         trigram_lm_scores,
     )
 
-    cur, _ = _current_generation(path)
-    if cur is None:
+    counts = _read_generation(spark, path)
+    if counts is None:
         raise ValueError(
             f"no LM-count generation at {path} yet — the "
             "foreach_batch_lm_counts sink has not committed a batch"
@@ -1274,7 +1279,7 @@ def read_lm_scores(
             lambdas=lambdas,
             materialize=False,
             toks=_bound_tokens(docs, id_col, text_col),
-            ref_counts=spark.read.parquet(cur),
+            ref_counts=counts,
         )
     except ValueError as e:
         if "unigram mass" in str(e):
@@ -1373,14 +1378,11 @@ def read_drift_q_metrics_by(
         drift_by_metrics_from_counts,
     )
 
-    cur, _ = _current_generation(path)
-    stored = (
-        spark.read.parquet(cur)
-        if cur is not None
-        else spark.createDataFrame(
+    stored = _read_generation(spark, path)
+    if stored is None:
+        stored = spark.createDataFrame(
             [], "q int, grp string, pin string, bin long, n_rows long"
         )
-    )
     qcfg = [r["q"] for r in stored.select("q").distinct().collect()]
     if len(qcfg) > 1:
         raise ValueError(
@@ -1678,16 +1680,13 @@ def read_drift_suite_metrics(
 
     stats = _check_suite_pin(stats, q)
     sig = _suite_pin_sig(stats, bins, q)
-    cur, _ = _current_generation(path)
-    stored = (
-        spark.read.parquet(cur)
-        if cur is not None
-        else spark.createDataFrame(
+    stored = _read_generation(spark, path)
+    if stored is None:
+        stored = spark.createDataFrame(
             [],
             "bins int, q int, pin string, slot int, grp string, "
             "bin long, n_rows long",
         )
-    )
     cfg = stored.select("bins", "q", "pin").distinct().collect()
     if len(cfg) > 1:
         raise ValueError(
